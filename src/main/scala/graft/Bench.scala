@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.obs.Layers
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
@@ -16,7 +17,10 @@ import java.nio.file.{Files, Paths}
  * time). The line therefore carries per-query times only for queries
  * at or above 0.3 s (the ones that matter for the perf grade), lumps
  * the rest into `_rest`, and the complete per-query map is written to
- * BENCH_DETAIL.json in the repo root for offline inspection.
+ * BENCH_DETAIL.json in the repo root for offline inspection, with the
+ * layers of each query's fastest execution under `layers`: build and
+ * exec wall, the Catalyst phases and Spark's execution counts, from a
+ * [[graft.obs.Layers]] window around every timed execution.
  */
 object Bench {
   private def r3(v: Double): String = f"$v%.3f"
@@ -28,11 +32,7 @@ object Bench {
     // surface, UTC) come from the shared [[SessionRecipe]] — the same
     // recipe the production faces (cli) and Verify run, so the bench
     // measures the engine as deployed (r16 verdict #4).
-    val spark = SessionRecipe.workload(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SessionRecipe.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // warm the JVM/session so the first measured query isn't charged for init
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -177,11 +177,20 @@ object Bench {
     // JSON carries "rc":1 (exit stays 0 so the driver still captures the
     // line; the field is the red flag).
     val failedQueries = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[Double] = {
+    // One Layers window per execution, from before fn() to the drained
+    // end of the write; closed in `finally` so a failed execution's
+    // counts never reach the next one. The drain runs after the clock
+    // stops. Returns the time and the execution's layers as JSON.
+    def timeOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Option[(Double, String)] = {
+      val window = Layers.open(spark)
       val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-        catch { case e: Throwable =>
+      var built, end = t0
+      val ok = try {
+        try {
+          val df = fn(spark, sfDir)
+          built = System.nanoTime()
+          df.write.format("noop").mode("overwrite").save(); true
+        } catch { case e: Throwable =>
           val first = Option(e.getMessage).getOrElse(e.getClass.getName)
             .linesIterator.take(1).mkString
           failedQueries.getOrElseUpdate(name, first)
@@ -191,13 +200,18 @@ object Bench {
         // release operator-persisted stage relations inside the timed
         // window (the release is part of the query's honest cost, and a
         // leaked index would make pass 2 measure a different query)
-        finally graft.ops.CachedRelations.releaseAll()
-      if (ok) Some((System.nanoTime() - t0) / 1e9) else None
+        finally { graft.ops.CachedRelations.releaseAll(); end = System.nanoTime() }
+      } finally window.close()
+      def ms(from: Long, to: Long) = (to - from) / 1000000L
+      val layers = (Seq("build_ms" -> ms(t0, built), "exec_ms" -> ms(built, end)) ++
+        window.counts.fields).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+      if (ok) Some(((end - t0) / 1e9, layers)) else None
     }
     val surface = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => oracleOnlyFixtures(name) }
       .filter { case (name, _) => only.forall(_(name)) }
     val best = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    val bestLayers = scala.collection.mutable.Map.empty[String, String]
     val firstPass = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     (0 until maxPasses).foreach { pass =>
       val order = pass % 3 match {
@@ -217,9 +231,12 @@ object Bench {
           // the back-to-back pair still leaves sweeps 1..N-1.
           val reps = if (pass == maxPasses - 1) 2 else 1
           (0 until reps).foreach { _ =>
-            timeOnce(name, fn).foreach { t =>
+            timeOnce(name, fn).foreach { case (t, layers) =>
               if (pass == 0 && !firstPass.contains(name)) firstPass(name) = t
-              best(name) = math.min(best.getOrElse(name, Double.MaxValue), t)
+              if (t < best.getOrElse(name, Double.MaxValue)) {
+                best(name) = t
+                bestLayers(name) = layers
+              }
             }
           }
         }
@@ -246,11 +263,13 @@ object Bench {
     val excluded = oracleOnlyFixtures.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val firstPassDetail = timed.map { case (k, _, p1) => "\"" + k + "\":" + r3(p1) }
       .mkString("{", ",", "}")
+    val layersDetail = results.map { case (k, _) => "\"" + k + "\":" + bestLayers(k) }
+      .mkString("{", ",", "}")
     val failDetail = failedQueries
       .map { case (k, v) => "\"" + k + "\":\"" + v.replaceAll("[\"\\\\]", "'").take(160) + "\"" }
       .mkString("{", ",", "}")
     val detailJson =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"rc":$rc,"failed":$failedJson,"failed_errors":$failDetail,"first_pass_total":${r3(totalFirstPass)},"protocol":"sweep$maxPasses-warmfinal","queries":$detail,"first_pass":$firstPassDetail,"sf":"$sfDir","excluded_oracle_fixtures":$excluded}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"n_failed":${failed.size},"rc":$rc,"failed":$failedJson,"failed_errors":$failDetail,"first_pass_total":${r3(totalFirstPass)},"protocol":"sweep$maxPasses-warmfinal","queries":$detail,"first_pass":$firstPassDetail,"sf":"$sfDir","excluded_oracle_fixtures":$excluded,"layers":$layersDetail}"""
     // NO run clobbers the committed full-surface detail by default:
     // targeted (SPARK_GRAFT_ONLY) runs write BENCH_DETAIL_partial.json,
     // full runs write BENCH_DETAIL_run.json (both gitignored), and the

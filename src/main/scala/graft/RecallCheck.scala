@@ -68,9 +68,7 @@ object RecallCheck {
   }
 
   private def session(): SparkSession = {
-    val s = SessionRecipe.workload(SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val s = SessionRecipe.local("8")
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Clusters, Dedup, Layout, Similarity}
+import graft.queries.LlmQueries
 
 /**
  * Empirical scaling probe for the top-cost operator families: run each
@@ -64,57 +65,11 @@ object ScaleProbe {
         .withColumn("user_id", col("user_id") + lit(c.toLong * 100000000L))
     }.reduce(_ unionByName _)
 
-  /** The q_llm_incr_neardup_chain_x64 lifecycle over an arbitrary
-    * documents relation (3 batches by doc_id mod 3). Shared with
-    * [[ScaleProbeCc]]'s pair-volume-controlled second-decade probe. */
-  private[graft] def nearDupChain(docs: DataFrame): DataFrame = {
-    // r17: parquet-materialized intermediates, the shipped query shape
-    // (see q_llm_incr_neardup_chain_x64 — A/B'd 0.56x vs the persists)
-    val spark = docs.sparkSession
-    val tmp = java.nio.file.Files.createTempDirectory("graft_chain_probe")
-    graft.ops.CachedRelations.trackCleanup { () =>
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(); ()
-      }
-      rm(tmp.toFile)
-    }
-    var matN = 0
-    def mat(d: DataFrame): DataFrame = {
-      matN += 1
-      val p = s"$tmp/rel$matN"
-      d.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
-    def sigOf(m: Int) = mat(
-      Dedup.minhashSignatures(docs.filter(col("doc_id") % 3 === m),
-        "doc_id", "text", shingleSize = 5, numHashes = 16))
-    val Seq(b0, b1, b2) = Seq(0, 1, 2).map(sigOf)
-    val v0 = mat(Dedup.incrementalNearDupVerdicts(b0, b0.limit(0),
-      numHashes = 16, bands = 4, threshold = 0.5))
-    var state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(
-      b0.limit(0).select(col("id"), col("sig"), lit(0).as("version")),
-      b0, v0, 0)))
-    val v1 = mat(Dedup.incrementalNearDupVerdicts(b1, state.select("id", "sig"),
-      numHashes = 16, bands = 4, threshold = 0.5))
-    state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(state, b1, v1, 1)))
-    val v2 = Dedup.incrementalNearDupVerdicts(b2, state.select("id", "sig"),
-      numHashes = 16, bands = 4, threshold = 0.5)
-    v0.withColumn("batch", lit(0))
-      .unionByName(v1.withColumn("batch", lit(1)))
-      .unionByName(v2.withColumn("batch", lit(2)))
-  }
-
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val outJson = args.lift(2).getOrElse("SCALE_PROBE.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionRecipe.workload(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SessionRecipe.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect() // session warmup
 
@@ -191,9 +146,9 @@ object ScaleProbe {
     }
 
     probe("incr_neardup_chain") {
-      nearDupChain(t("documents"))
+      LlmQueries.incrNearDupChainX64(t("documents"))
     } {
-      nearDupChain(big("documents"))
+      LlmQueries.incrNearDupChainX64(big("documents"))
     }
 
     probe("cc_star") {
@@ -358,65 +313,6 @@ object ScaleProbe {
 object ScaleProbeCc {
   import ScaleProbe.copies
 
-  /** [[ScaleProbe.nearDupChain]] with a stopwatch BETWEEN its stages
-    * (r15 verdict ask 3): the chain's second decade ran 1.67× under
-    * linear edges while cc_star sat at 1.19 on the same families, so
-    * the superlinear term lives in the chain's own stage structure —
-    * this names it. Each stage forces its persisted relation (the
-    * pipeline materializes the same caches), so stage times sum to
-    * ~the one-shot run and the per-stage decade ratios are the
-    * attribution instrument. */
-  private[graft] def chainStaged(docs: DataFrame): Seq[(String, Double)] = {
-    import graft.ops.{CachedRelations, Dedup}
-    val out = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    def timed(name: String)(f: => Unit): Unit = {
-      val t0 = System.nanoTime(); f
-      out(name) = (System.nanoTime() - t0) / 1e9
-    }
-    // verdict CONSTRUCTION is timed separately from its force:
-    // incrementalNearDupVerdicts' new-new phase runs its connected-
-    // components engine EAGERLY at definition time (localCheckpoint of
-    // the symmetric pair relation, the take() engine probe, and the
-    // driver union-find / label-prop rounds all execute before the
-    // verdict DataFrame exists) — a force-only stopwatch misses it
-    // (the first r16 staged run summed to 1/3 of the one-shot total)
-    def timedRel(name: String)(f: => DataFrame): DataFrame = {
-      val t0 = System.nanoTime(); val r = f
-      out(name) = (System.nanoTime() - t0) / 1e9
-      r
-    }
-    def sigOf(m: Int) = CachedRelations.track(
-      Dedup.minhashSignatures(docs.filter(col("doc_id") % 3 === m),
-        "doc_id", "text", shingleSize = 5, numHashes = 16)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val Seq(b0, b1, b2) = Seq(0, 1, 2).map(sigOf)
-    timed("sig")(Seq(b0, b1, b2).foreach(_.count()))
-    def mat(d: DataFrame) = CachedRelations.track(
-      d.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val v0 = timedRel("verdict_b0_def")(mat(Dedup.incrementalNearDupVerdicts(
-      b0, b0.limit(0), numHashes = 16, bands = 4, threshold = 0.5)))
-    timed("verdict_b0_force")(v0.count())
-    var state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(
-      b0.limit(0).select(col("id"), col("sig"), lit(0).as("version")),
-      b0, v0, 0)))
-    timed("state_roll_0")(state.count())
-    val v1 = timedRel("verdict_b1_def")(mat(Dedup.incrementalNearDupVerdicts(
-      b1, state.select("id", "sig"), numHashes = 16, bands = 4, threshold = 0.5)))
-    timed("verdict_b1_force")(v1.count())
-    state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(state, b1, v1, 1)))
-    timed("state_roll_1")(state.count())
-    val v2 = timedRel("verdict_b2_def")(Dedup.incrementalNearDupVerdicts(
-      b2, state.select("id", "sig"), numHashes = 16, bands = 4, threshold = 0.5))
-    timed("verdict_b2_force") {
-      v0.withColumn("batch", lit(0))
-        .unionByName(v1.withColumn("batch", lit(1)))
-        .unionByName(v2.withColumn("batch", lit(2)))
-        .write.format("noop").mode("overwrite").save()
-    }
-    CachedRelations.releaseAll()
-    out.toSeq
-  }
-
   /** Corpus growth with CONSTANT-SIZE near-dup families: copies 2k-1
     * and 2k form group k — every token is REWRITTEN to a hash of
     * (group, token), so within a group the corpus's token-level
@@ -446,12 +342,7 @@ object ScaleProbeCc {
   def main(args: Array[String]): Unit = {
     val baseDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outJson = args.lift(1).getOrElse("SCALE_PROBE_CC.json")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionRecipe.workload(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SessionRecipe.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.setLogLevel("WARN")
     spark.range(1000000).selectExpr("sum(id)").collect()
 
@@ -495,7 +386,7 @@ object ScaleProbeCc {
     val ops = Seq[(String, String => DataFrame)](
       "cc_star_paired_families" -> ccStar,
       "incr_neardup_chain_paired_families" ->
-        (path => ScaleProbe.nearDupChain(spark.read.parquet(path))))
+        (path => LlmQueries.incrNearDupChainX64(spark.read.parquet(path))))
     val opsJson = ops.map { case (name, fn) =>
       val t1 = best(fn(s"$work/d1"))
       val t10 = best(fn(s"$work/d10"))
@@ -505,28 +396,10 @@ object ScaleProbeCc {
       f""""$name":{"sec":{"1x":$t1%.3f,"10x":$t10%.3f,"100x":$t100%.3f},""" +
         f""""decade_ratios":{"d1":${t10 / t1}%.2f,"d2":${t100 / t10}%.2f}}"""
     }.mkString(",")
-    // STAGE decomposition of the chain (r15 verdict ask 3): per-stage
-    // min of 2 staged runs per decade — the per-stage decade ratios
-    // name the superlinear term the conflated 1.67x hid
-    val stagesByScale = Seq("d1", "d10", "d100").map { d =>
-      val runs = (0 until 2).map(_ => chainStaged(spark.read.parquet(s"$work/$d")))
-      val order = runs.head.map(_._1)
-      d -> order.map(n => n -> runs.map(_.toMap.apply(n)).min)
-    }.toMap
-    Seq("d1", "d10", "d100").foreach { d =>
-      println(s"[probe-cc] chain stages $d: " + stagesByScale(d)
-        .map { case (n, t) => f"$n=$t%.2fs" }.mkString(" "))
-    }
-    val stageJson = stagesByScale("d1").map(_._1).map { n =>
-      val (t1, t10, t100) = (stagesByScale("d1").toMap.apply(n),
-        stagesByScale("d10").toMap.apply(n), stagesByScale("d100").toMap.apply(n))
-      f""""$n":{"sec":{"1x":$t1%.3f,"10x":$t10%.3f,"100x":$t100%.3f},""" +
-        f""""decade_ratios":{"d1":${t10 / t1}%.2f,"d2":${t100 / t10}%.2f}}"""
-    }.mkString(",")
     val json = f"""{"base_sf":"$baseDir",""" +
       f""""docs":{"1x":${counts("d1")},"10x":${counts("d10")},"100x":${counts("d100")}},""" +
       f""""edges":{"1x":${edges("d1")},"10x":${edges("d10")},"100x":${edges("d100")}},""" +
-      f""""ops":{$opsJson},"chain_stages":{$stageJson}}"""
+      f""""ops":{$opsJson}}"""
     java.nio.file.Files.write(java.nio.file.Paths.get(outJson),
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(s"SCALE_PROBE_CC $outJson")

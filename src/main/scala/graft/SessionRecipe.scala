@@ -4,10 +4,11 @@ import org.apache.spark.sql.SparkSession
 /**
  * The engine's shared session recipe: workload-constant Spark confs
  * every graft session wants, applied by ALL session-building mains
- * (Bench, Verify, the cli faces, the probe tools) so the production
- * faces and the benchmark measure the same engine (r16 verdict #4:
- * the codegen-cache conf lived only in Bench and the probe mains,
- * leaving SparkEntry/Verify on the 100-entry default).
+ * (Bench, Verify, the cli faces, the tools) so the production faces
+ * and the benchmark measure the same engine (r16 verdict #4: the
+ * codegen-cache conf lived only in Bench and the one-off probe mains,
+ * leaving SparkEntry/Verify on the 100-entry default; OPTIMIZATION_r17.md
+ * §3).
  *
  * - `spark.sql.codegen.cache.maxEntries`: the engine serves ~300
  *   distinct query plans per session; Spark's generated-class cache
@@ -20,9 +21,10 @@ import org.apache.spark.sql.SparkSession
  *   Env-overridable via SPARK_GRAFT_CODEGEN_CACHE.
  * - session timezone UTC: the engine's documented timestamp contract.
  *
- * Deliberately NOT here: master, shuffle partitions, UI — those are
- * per-face choices (the bench's core count is a driver-contract input;
- * the cli respects SPARK_MASTER).
+ * Deliberately NOT in [[workload]]: master, shuffle partitions, UI —
+ * those are per-face choices (the bench takes its core count from
+ * SPARK_GRAFT_CPUS; the cli respects SPARK_MASTER). The local mains
+ * share them through [[local]], each with its own core count.
  */
 object SessionRecipe {
   def codegenCacheEntries: String =
@@ -31,4 +33,12 @@ object SessionRecipe {
   def workload(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries)
     .config("spark.sql.session.timeZone", "UTC")
+
+  /** A `local[cores]` session with one shuffle partition per core and
+    * the UI off, on top of [[workload]]. */
+  def local(cores: String): SparkSession = workload(SparkSession.builder()
+    .master(s"local[$cores]")
+    .config("spark.sql.shuffle.partitions", cores)
+    .config("spark.ui.enabled", "false"))
+    .getOrCreate()
 }

@@ -18,7 +18,10 @@ import graft.transforms.{EngineConfig, Transforms}
  * errors are carried as a `_err` string column (first failing rule
  * wins, rule order — SURVEY §2.6) instead of exceptions, so Catalyst
  * still gets predicate pushdown/codegen across the stages, and the
- * main/error branches are two filters over the same cached lineage.
+ * main/error branches are two filters over the same lineage. Nothing
+ * is cached: every action on either branch re-reads the source and
+ * re-runs the whole lineage (the skip path pays this once per sink
+ * write and error probe; ROADMAP item 2).
  */
 object PipelineCompiler {
 

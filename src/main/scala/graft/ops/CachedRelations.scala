@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
  * Registry for persisted STAGE relations created inside operators
@@ -25,12 +25,36 @@ object CachedRelations {
   /** Register an operator-persisted relation for later release. */
   def track(df: DataFrame): DataFrame = { active.add(df); df }
 
-  /** Register an arbitrary stage-resource cleanup (r17: the chain's
-    * per-execution parquet state dir) to run at [[releaseAll]]. Unlike
+  /** Register an arbitrary stage-resource cleanup (r17: the
+    * [[parquetStages]] temp dirs) to run at [[releaseAll]]. Unlike
     * an unpersist, a cleanup is NOT recompute-safe — callers must
     * release only after their action has fully consumed the result
     * (exactly the documented contract above). */
   def trackCleanup(f: () => Unit): Unit = cleanups.add(f)
+
+  /** A per-execution PARQUET stage boundary (r17): returns a function
+    * that writes each relation it is given to the next numbered dir
+    * under one fresh temp dir (`prefix`) and returns the re-read, so
+    * every consumer scans the materialized rows instead of re-planning
+    * the lineage. The temp dir is deleted at [[releaseAll]] via
+    * [[trackCleanup]]; nothing outlives the execution. */
+  def parquetStages(spark: SparkSession, prefix: String): DataFrame => DataFrame = {
+    val tmp = java.nio.file.Files.createTempDirectory(prefix)
+    trackCleanup { () =>
+      def rm(f: java.io.File): Unit = {
+        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
+        f.delete(); ()
+      }
+      rm(tmp.toFile)
+    }
+    var n = 0
+    df => {
+      n += 1
+      val p = s"$tmp/rel$n"
+      df.write.mode("overwrite").parquet(p)
+      spark.read.parquet(p)
+    }
+  }
 
   /** Unpersist (non-blocking) every tracked relation and run every
     * tracked cleanup; returns how many were released. Safe to call

@@ -28,6 +28,42 @@ object LlmQueries {
       }).toDF("doc_id", "content")
   }
 
+  /** The body of `q_llm_incr_neardup_chain_x64`: three corpus
+    * versions (doc_id mod 3) ingested in sequence against a compacted
+    * versioned signature state; every batch's verdicts tagged with its
+    * version. Shared with [[graft.ScaleProbe]]'s scaling curves.
+    *
+    * Each multi-consumer intermediate (batch signatures, verdicts,
+    * compacted state) goes through a parquet stage boundary
+    * ([[graft.ops.CachedRelations.parquetStages]]) — the production
+    * shape, where the state is a table on disk between versions. r17
+    * A/B (interleaved in one session, verdicts proven identical;
+    * OPTIMIZATION_r17.md §5): parquet 2.65 s vs MEMORY_AND_DISK
+    * persists 4.69 s — the write+read truncates the lineage the
+    * persists re-planned per consumer, and the columnar re-scan of the
+    * state-sized rows is cheaper than the cache. Nothing outlives the
+    * execution (every run computes from the parquet inputs). */
+  def incrNearDupChainX64(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    val mat = graft.ops.CachedRelations.parquetStages(docs.sparkSession, "graft_chain_state")
+    def sigOf(m: Int) = mat(
+      Dedup.minhashSignatures(docs.filter(col("doc_id") % 3 === m),
+        "doc_id", "text", shingleSize = 5, numHashes = 16))
+    val Seq(b0, b1, b2) = Seq(0, 1, 2).map(sigOf)
+    val v0 = mat(Dedup.incrementalNearDupVerdicts(b0, b0.limit(0),
+      numHashes = 16, bands = 4, threshold = 0.5))
+    var state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(
+      b0.limit(0).select(col("id"), col("sig"), lit(0).as("version")),
+      b0, v0, 0)))
+    val v1 = mat(Dedup.incrementalNearDupVerdicts(b1, state.select("id", "sig"),
+      numHashes = 16, bands = 4, threshold = 0.5))
+    state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(state, b1, v1, 1)))
+    val v2 = Dedup.incrementalNearDupVerdicts(b2, state.select("id", "sig"),
+      numHashes = 16, bands = 4, threshold = 0.5)
+    v0.withColumn("batch", lit(0))
+      .unionByName(v1.withColumn("batch", lit(1)))
+      .unionByName(v2.withColumn("batch", lit(2)))
+  }
+
   /** C4-shaped salt page, six deterministic lines per doc built from
     * doc_id alone so any engine constructs the byte-identical text:
     * one good intro sentence, a no-terminal-punct line, a too-short
@@ -2500,57 +2536,12 @@ object LlmQueries {
     // verdicts tagged with its version. Rows-only: the chain contract
     // (incl. id re-registration supersession) is pinned by
     // IncrementalNearDupSpec; the per-batch verdict algorithm by the
-    // oracled md5 twin above. Batch signatures persist across their
-    // three consumers (screen, state lineage, next screen) — without
-    // it the whole sig computation re-runs per version.
+    // oracled md5 twin above. Batch signatures are materialized once
+    // for their three consumers (screen, state lineage, next screen) —
+    // without it the whole sig computation re-runs per version.
     Q("q_llm_incr_neardup_chain_x64",
-      (s, dir) => {
-        val docs = t(s, dir, "documents")
-        // Each multi-consumer intermediate (batch signatures, verdicts,
-        // compacted state) is materialized to PARQUET in a fresh
-        // per-execution temp dir — the production shape, where the
-        // state is a table on disk between versions. r17 A/B
-        // (ChainDecomp, interleaved in one session, verdicts proven
-        // identical): parquet 2.65 s vs MEMORY_AND_DISK persists
-        // 4.69 s — the write+read truncates the lineage the persists
-        // re-planned per consumer, and the columnar re-scan of the
-        // state-sized rows is cheaper than the cache. The dir is
-        // deleted at the caller's releaseAll; nothing outlives the
-        // execution (every run computes from the parquet inputs).
-        val tmp = java.nio.file.Files.createTempDirectory("graft_chain_state")
-        graft.ops.CachedRelations.trackCleanup { () =>
-          def rm(f: java.io.File): Unit = {
-            val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-            f.delete(); ()
-          }
-          rm(tmp.toFile)
-        }
-        var matN = 0
-        def mat(d: org.apache.spark.sql.DataFrame) = {
-          matN += 1
-          val p = s"$tmp/rel$matN"
-          d.write.mode("overwrite").parquet(p)
-          s.read.parquet(p)
-        }
-        def sigOf(m: Int) = mat(
-          Dedup.minhashSignatures(docs.filter(col("doc_id") % 3 === m),
-            "doc_id", "text", shingleSize = 5, numHashes = 16))
-        val Seq(b0, b1, b2) = Seq(0, 1, 2).map(sigOf)
-        val v0 = mat(Dedup.incrementalNearDupVerdicts(b0, b0.limit(0),
-          numHashes = 16, bands = 4, threshold = 0.5))
-        var state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(
-          b0.limit(0).select(col("id"), col("sig"), lit(0).as("version")),
-          b0, v0, 0)))
-        val v1 = mat(Dedup.incrementalNearDupVerdicts(b1, state.select("id", "sig"),
-          numHashes = 16, bands = 4, threshold = 0.5))
-        state = mat(Dedup.nearDupStateCompact(Dedup.nearDupStateAppend(state, b1, v1, 1)))
-        val v2 = Dedup.incrementalNearDupVerdicts(b2, state.select("id", "sig"),
-          numHashes = 16, bands = 4, threshold = 0.5)
-        v0.withColumn("batch", lit(0))
-          .unionByName(v1.withColumn("batch", lit(1)))
-          .unionByName(v2.withColumn("batch", lit(2)))
-          .withColumnRenamed("id", "doc_id")
-      },
+      (s, dir) => incrNearDupChainX64(t(s, dir, "documents"))
+        .withColumnRenamed("id", "doc_id"),
       None),
 
     // md5-portable oracle twin of the chain above (r11): the SAME

@@ -39,10 +39,10 @@ object Queries {
     // without an explicit schema every `read.parquet` resolution
     // re-lists the directory and re-reads parquet footers on the
     // driver, a fixed ~20-40 ms per query BUILD paid by all ~300
-    // queries on every execution (FloorProbe r17: build is 60-240 ms
-    // of a ~250 ms tail row). This is metadata caching — exactly what
-    // a catalog/metastore provides in production — never result or
-    // file-listing caching: the scan still lists and reads the live
+    // queries on every execution (OPTIMIZATION_r17.md §5b: build is
+    // 60-240 ms of a ~250 ms tail row). This is metadata caching —
+    // exactly what a catalog/metastore provides in production — never
+    // result or file-listing caching: the scan still lists and reads the live
     // files at execution. Testdata paths are immutable within a run;
     // the values depend only on the files' schema, and Schemas.adapt
     // still validates every arrival shape.
